@@ -1,15 +1,16 @@
-"""`lightning.*` name resolution: rewrite standard SQL so Catalyst sees
-plain temp views.
+"""`lightning.*` name resolution: bind each relation into standard SQL
+as a DataFrame.
 
 The reference registers a DSv2 TableCatalog named `lightning` and lets
 the analyzer call `loadTable` per identifier (SURVEY.md §3 EP2). PySpark
 cannot register a Python TableCatalog, so the idiomatic equivalent is a
 resolver pass: find `lightning.datasource.**` / `lightning.metastore.**`
 identifier chains in the query text (outside quoted regions), resolve
-each to a DataFrame via the metastore + catalog units, register it as a
-deterministic temp view, and splice the view name back in. The rewritten
-text goes to `spark.sql()` — Catalyst then owns analysis, optimization
-(pushdown into the just-registered scans) and execution.
+each to a DataFrame via the metastore + catalog units, and replace it
+with a `{key}` placeholder. `spark.sql(template, **dataframes)` binds
+the placeholders for the one statement and analyses it eagerly, so the
+session catalog keeps no trace of the relations. Catalyst then owns
+analysis, optimization (pushdown into the bound scans) and execution.
 
 USL tables re-enter resolution with their activation SQL (the reference
 nests `context.sql(...)` inside the scan, `usl/USLTableScan.scala:48-51`);
@@ -18,7 +19,6 @@ we add cycle detection, which the reference lacks (documented divergence).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 from typing import Optional
@@ -184,6 +184,17 @@ def _mask_quoted(sql: str) -> str:
     parts = _QUOTED.split(sql)
     return "".join(p if i % 2 == 0 else " " * len(p)
                    for i, p in enumerate(parts))
+
+
+def _splice(sql: str, spans: list[tuple[int, int, str]],
+            gap=lambda s: s) -> str:
+    """``sql`` with each non-overlapping (start, end, text) span
+    replaced by its text; the text between spans goes through ``gap``."""
+    out, pos = [], 0
+    for start, end, text in sorted(spans):
+        out += [gap(sql[pos:start]), text]
+        pos = end
+    return "".join(out) + gap(sql[pos:])
 
 
 _JOIN_TYPE_TAIL = re.compile(
@@ -533,24 +544,55 @@ class Resolver:
         opts["dbtable"] = f"({pushed}) pushed_q"
         return self.spark.read.format("jdbc").options(**opts).load()
 
-    def resolve_sql(self, sql: str, _stack: frozenset = frozenset()) -> str:
-        """Rewrite every lightning.* table reference to a temp-view
-        name. SELECTs over plain (possibly joined) relations with
+    def resolve_sql(self, sql: str, _stack: frozenset = frozenset()
+                    ) -> tuple[str, dict[str, DataFrame]]:
+        """Split a statement into a `spark.sql` template and the
+        DataFrames it binds: every lightning.* relation, time-travelled
+        ones included, becomes a `{key}` placeholder, literal braces are
+        doubled, and a relation named twice binds one key and one
+        DataFrame. SELECTs over plain (possibly joined) relations with
         simple WHERE conjuncts hand each relation's conjuncts to the
         Delta/Iceberg units as PLANNING hints — stats/manifest-bounds
         file skipping (`extract_prune_conjuncts` documents the
         soundness guards); Catalyst still applies the full predicate
         to the kept files."""
-        sql = self._rewrite_time_travel(sql)
-        prune_hit = extract_prune_conjuncts(sql)
-        parts = _QUOTED.split(sql)
-        for i, part in enumerate(parts):
-            if i % 2 == 1:  # quoted segment — leave untouched
+        masked = _mask_quoted(sql)
+        bound: dict[tuple, DataFrame] = {}  # relation identity -> df
+
+        def key(ident: tuple) -> str:
+            return f"t{list(bound).index(ident)}"
+
+        # a TIMESTAMP AS OF literal is itself a quoted region, so time
+        # travel matches the raw text; a match counts only when its
+        # chain starts outside quotes (masked text keeps it there)
+        tt = [(m.start(), m.end(), self._bind_time_travel(m, bound))
+              for m in _TIME_TRAVEL.finditer(sql)
+              if masked[m.start()] != " "]
+        # pruning sees each time-travelled relation as a plain name
+        prune_hit = extract_prune_conjuncts(
+            _splice(sql, [(s, e, key(i)) for s, e, i in tt]))
+        spans = [(s, e, "{%s}" % key(i)) for s, e, i in tt]
+        for m in _CHAIN.finditer(masked):
+            if any(s <= m.start() < e for s, e, _i in tt):
                 continue
-            parts[i] = _CHAIN.sub(
-                lambda m: self._rewrite_chain(m.group(0), _stack,
-                                              prune_hit), part)
-        return "".join(parts)
+            ident, rest = self._bind_chain(m.group(0), _stack,
+                                           prune_hit, bound)
+            spans.append((m.start(), m.end(),
+                          ".".join(["{%s}" % key(ident)] + rest)))
+        template = _splice(sql, spans, lambda s: s.replace(
+            "{", "{{").replace("}", "}}"))
+        return template, {f"t{i}": df for i, df in enumerate(bound.values())}
+
+    def sql(self, query: str, _stack: frozenset = frozenset()) -> DataFrame:
+        """Run a statement with its lightning.* relations bound as
+        DataFrames. PySpark names them uniquely for this one eagerly
+        analysed statement and drops the names afterwards, so nothing
+        is left in the session catalog and concurrent statements never
+        see each other's relations."""
+        template, views = self.resolve_sql(query, _stack)
+        if not views:
+            return self.spark.sql(query)
+        return self.spark.sql(template, **views)
 
     def load_table(self, path: list[str],
                    _stack: frozenset = frozenset(),
@@ -566,76 +608,50 @@ class Resolver:
             return self._load_metastore_table(path[1:], _stack)
         raise ResolutionError(f"unknown lightning root: {path[0]}")
 
-    # -- chain rewriting ----------------------------------------------------
+    # -- chain binding ------------------------------------------------------
 
-    def _rewrite_time_travel(self, sql: str) -> str:
-        """Replace `<datasource chain> [FOR] VERSION|TIMESTAMP AS OF v`
-        with a temp view over the time-travelled load. Runs before the
-        quoted-split pass because a TIMESTAMP literal is itself a quoted
-        region — so instead of splitting, the _QUOTED tokenization is
-        used to compute the UNQUOTED character ranges, and a match is
-        rewritten only when its chain starts in one: chains inside
-        single-quoted strings, double-quoted strings, and backtick
-        identifiers are all left untouched (same protection every other
-        chain rewrite gets), while the match's own trailing timestamp
-        literal may still span into a quoted region."""
-        unquoted: list[tuple[int, int]] = []
-        pos = 0
-        for i, part in enumerate(_QUOTED.split(sql)):
-            if i % 2 == 0:
-                unquoted.append((pos, pos + len(part)))
-            pos += len(part)
+    def _bind_time_travel(self, m: re.Match, bound: dict) -> tuple:
+        """`<datasource chain> [FOR] VERSION|TIMESTAMP AS OF v` -> the
+        identity of its time-travelled load, added to ``bound``."""
+        path = m.group("chain").split(".")[1:]
+        raw = m.group("val")
+        value = (raw[1:-1].replace("''", "'") if raw.startswith("'")
+                 else int(raw))
+        if m.group("kind").upper() in ("VERSION", "SYSTEM_VERSION"):
+            tt = ("version", value)
+        else:
+            tt = ("timestamp", str(value))
+        ident = ("tt", ".".join(path).lower(), tt)
+        if ident not in bound:
+            bound[ident] = self._load_datasource_table(path[1:], tt=tt)
+        return ident
 
-        def repl(m: re.Match) -> str:
-            s = m.start("chain")
-            if not any(lo <= s < hi for lo, hi in unquoted):
-                return m.group(0)  # inside a quoted region
-            path = m.group("chain").split(".")[1:]
-            kind = m.group("kind").upper()
-            raw = m.group("val")
-            if raw.startswith("'"):
-                value = raw[1:-1].replace("''", "'")
-            else:
-                value = int(raw)
-            if kind in ("VERSION", "SYSTEM_VERSION"):
-                tt = ("version", value)
-            else:
-                tt = ("timestamp", str(value))
-            df = self._load_datasource_table(path[1:], tt=tt)
-            digest = hashlib.md5(
-                (".".join(p.lower() for p in path)
-                 + f"|{kind}|{value}").encode()).hexdigest()[:12]
-            view = f"l_{path[-1].lower()}_tt_{digest}"
-            df.createOrReplaceTempView(view)
-            return view
-
-        return _TIME_TRAVEL.sub(repl, sql)
-
-    def _rewrite_chain(self, chain: str, _stack: frozenset,
-                       prune_hit: Optional[dict] = None) -> str:
+    def _bind_chain(self, chain: str, _stack: frozenset,
+                    prune_hit: Optional[dict], bound: dict
+                    ) -> tuple[tuple, list[str]]:
         """A matched chain may include trailing column projections
         (`lightning.datasource.f.t.orders.o_orderkey`): resolve the
-        longest prefix that names a table, keep the rest. When the
-        chain is one of the query's pruned FROM relations, its
-        conjuncts ride into the load as planning hints (and the view
-        name gets its own digest so unpruned registrations are never
-        clobbered for other callers)."""
+        longest prefix that names a table, add it to ``bound`` and
+        return (its identity, the trailing columns). When the chain is
+        one of the query's pruned FROM relations, its conjuncts ride
+        into the load as planning hints."""
         prune = (prune_hit or {}).get(chain)
         parts = chain.split(".")[1:]  # drop leading 'lightning'
         last_err: Optional[Exception] = None
         for cut in range(len(parts), 1, -1):
-            prefix = parts[:cut]
-            try:
-                df = self.load_table(prefix, _stack,
-                                     prune=prune if cut == len(parts)
-                                     else None)
-            except Exception as e:  # try a shorter prefix
-                # keep the LONGEST-prefix error — it names the actual
-                # failure (e.g. "not activated"), not a fallback miss
-                if last_err is None:
-                    last_err = e
-                continue
-            rest = parts[cut:]
+            prefix, rest = parts[:cut], parts[cut:]
+            hint = None if rest else prune
+            ident = ("chain", ".".join(prefix).lower(), repr(hint))
+            df = bound.get(ident)
+            if df is None:
+                try:
+                    df = self.load_table(prefix, _stack, prune=hint)
+                except Exception as e:  # try a shorter prefix
+                    # keep the LONGEST-prefix error — it names the actual
+                    # failure (e.g. "not activated"), not a fallback miss
+                    if last_err is None:
+                        last_err = e
+                    continue
             # Spark SQL identifiers are case-insensitive by default —
             # compare accordingly, or O_ORDERKEY vs o_orderkey would
             # fail resolution that plain Spark SQL accepts
@@ -643,27 +659,17 @@ class Resolver:
                 # the trailing segment is neither a table (longer prefix
                 # failed) nor a column of this table — surface the
                 # longer prefix's error instead of leaking a mangled
-                # view name from Spark's analyzer
+                # relation name from Spark's analyzer
                 if last_err is None:
                     last_err = ResolutionError(
                         f"{'.'.join(['lightning'] + prefix + [rest[0]])} is "
                         f"neither a table nor a column of "
                         f"lightning.{'.'.join(prefix)}")
                 continue
-            view = self._view_name(prefix)
-            if prune and cut == len(parts):
-                digest = hashlib.md5(
-                    repr(prune).encode()).hexdigest()[:8]
-                view = f"{view}_pr_{digest}"
-            df.createOrReplaceTempView(view)
-            return ".".join([view] + rest)
+            bound.setdefault(ident, df)
+            return ident, rest
         raise ResolutionError(
             f"cannot resolve {chain!r}: {last_err}") from last_err
-
-    @staticmethod
-    def _view_name(path: list[str]) -> str:
-        digest = hashlib.md5(".".join(p.lower() for p in path).encode()).hexdigest()[:12]
-        return f"l_{path[-1].lower()}_{digest}"
 
     # -- datasource root ----------------------------------------------------
 
@@ -792,8 +798,7 @@ class Resolver:
             # same error contract as USLTable.scala:47-52
             raise ResolutionError(
                 f"USL table {table} is not activated (ACTIVATE USL TABLE first)")
-        rewritten = self.resolve_sql(query, _stack | {key})
-        df = self.spark.sql(rewritten)
+        df = self.sql(query, _stack | {key})
         return self._enforce_access(df, spec, ns + [usl.name, table])
 
     def _enforce_access(self, df: DataFrame, spec: dict, path: list[str]):

@@ -8,7 +8,7 @@ analogue of installing the reference's session extension +
     ctx.sql("SELECT * FROM lightning.datasource.file.tpch.orders").show()
 
 `sql()` dispatches: Lightning DDL -> command layer (driver-side metadata
-ops); anything else -> resolver rewrite -> `spark.sql()` (Catalyst owns
+ops); anything else -> resolver binding -> `spark.sql()` (Catalyst owns
 planning/execution end to end — EP2 in SURVEY.md §3).
 """
 
@@ -49,7 +49,7 @@ class LightningContext:
             pushed = self.resolver.try_single_jdbc_pushdown(query)
             if pushed is not None:
                 return pushed
-        return self.spark.sql(self.resolver.resolve_sql(query))
+        return self.resolver.sql(query)
 
     def table(self, name: str) -> DataFrame:
         """Load a lightning.* table directly (DataFrame API path)."""

@@ -153,7 +153,6 @@ def hypertable_rollup(events: DataFrame, ts_col: str = "ts",
           for r in resolutions])
     bucket_cols = ", ".join(f"b_{r}" for r in resolutions)
     sets = ", ".join(f"(key, b_{r})" for r in resolutions)
-    buckets.createOrReplaceTempView("__rollup_in")
     res_case = " ".join(
         f"WHEN b_{r} IS NOT NULL THEN '{r}'" for r in resolutions)
     # exact cents accumulation: engine-portable money math (see
@@ -166,11 +165,11 @@ def hypertable_rollup(events: DataFrame, ts_col: str = "ts",
                COUNT(v) AS n,
                CAST(SUM(CAST(ROUND(v * 100) AS BIGINT)) AS DOUBLE) / 100
                  AS sum_value
-        FROM __rollup_in
+        FROM {{rollup_in}}
         GROUP BY GROUPING SETS ({sets})
         HAVING CASE {res_case} END IS NOT NULL
         ORDER BY resolution, bucket_start, key
-    """)
+    """, rollup_in=buckets)
 
 
 def gap_filled_hourly(events: DataFrame, ts_col: str = "ts",
@@ -196,35 +195,31 @@ def gap_filled_hourly(events: DataFrame, ts_col: str = "ts",
                    (F.sum(F.round(F.col(value_col) * 100).cast("long"))
                     .cast("double") / 100).alias("sv")))
     if method == "recursive":
-        # scope BOTH side effects: the recursion-limit conf is saved and
-        # restored (pattern: operators/layout.py outputTimestampType),
-        # and the input view gets a unique name dropped after use. The
-        # recursion limit is read at EXECUTION time, so the calendar is
-        # materialized eagerly (localCheckpoint — one row per hour,
-        # bounded) inside the scoped region; the conf seen by the rest
-        # of the session is exactly what it was before this call.
-        import uuid
-
-        view = f"__gapfill_in_{uuid.uuid4().hex[:12]}"
+        # scope the recursion-limit conf: it is saved and restored
+        # (pattern: operators/layout.py outputTimestampType). The limit
+        # is read at EXECUTION time, so the calendar is materialized
+        # eagerly (localCheckpoint — one row per hour, bounded) inside
+        # the scoped region; the conf seen by the rest of the session
+        # is exactly what it was before this call.
         conf_key = "spark.sql.cteRecursionLevelLimit"
         prev = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, "1000000")
-        events.select(F.col(ts_col).alias("ts")).createOrReplaceTempView(view)
         try:
-            cal = spark.sql(f"""
+            cal = spark.sql("""
                 WITH RECURSIVE cal(h, hi) AS (
                   SELECT CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP),
                          CAST(date_trunc('hour', MAX(ts)) AS TIMESTAMP)
-                  FROM {view}
+                  FROM {ev}
                   UNION ALL
                   SELECT h + INTERVAL 1 HOUR, hi FROM cal WHERE h < hi
-                ) SELECT h FROM cal""").localCheckpoint(eager=True)
+                ) SELECT h FROM cal""",
+                ev=events.select(F.col(ts_col).alias("ts")),
+            ).localCheckpoint(eager=True)
         finally:
             if prev is None:
                 spark.conf.unset(conf_key)
             else:
                 spark.conf.set(conf_key, prev)
-            spark.catalog.dropTempView(view)
     else:
         bounds = events.agg(
             F.date_trunc("hour", F.min(ts_col)).alias("lo"),

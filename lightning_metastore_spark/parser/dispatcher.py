@@ -396,7 +396,7 @@ class InsertInto(Command):
             raise CommandParseError(
                 f"no datasource at lightning.{'.'.join(self.path)}")
         ds, residual = hit
-        df = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        df = ctx.resolver.sql(self.query)
         if self.overwrite:
             # INSERT OVERWRITE t SELECT ... FROM t would otherwise read
             # and truncate the same files; materialize the SELECT first
@@ -928,7 +928,7 @@ class CreateTableAsSelect(Command):
                 return self._df(ctx, [(".".join(self.path),)], "created string")
             raise CommandParseError(
                 f"table already exists: lightning.{'.'.join(self.path)}")
-        df = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        df = ctx.resolver.sql(self.query)
         unit.write_table(df, residual, mode="errorifexists")
         return self._df(ctx, [(".".join(self.path),)], "created string")
 
@@ -1003,7 +1003,7 @@ class MergeInto(Command):
         if re.match(r"^lightning\.", src, re.I):
             s_base = ctx.resolver.load_table(_split_path(src))
         else:
-            s_base = ctx.spark.sql(ctx.resolver.resolve_sql(src))
+            s_base = ctx.resolver.sql(src)
 
         # lakehouse targets: file-granular copy-on-write merge
         from lightning_metastore_spark.catalog.units import (
@@ -1377,7 +1377,7 @@ class ActivateUSLTable(Command):
                      if s["name"].lower() == table.lower()), None)
         if spec is None:
             raise CommandParseError(f"USL {usl_name} has no table {table}")
-        analyzed = ctx.spark.sql(ctx.resolver.resolve_sql(self.query))
+        analyzed = ctx.resolver.sql(self.query)
         declared = spec.columns
         if len(analyzed.schema) != len(declared):
             raise CommandParseError(
@@ -1545,22 +1545,15 @@ class RunDQ(Command):
                 continue
             if self.name is not None and dq_name != self.name:
                 continue
-            cte_defs = {k: v for k, v in ann["args"].items()
-                        if k not in ("name", "expression")}
-            view = f"__dq_{dq_name}"
-            df.createOrReplaceTempView(view)
+            ctes = ", ".join(f"{k} AS ({v})" for k, v in ann["args"].items()
+                             if k not in ("name", "expression"))
             # ${var} becomes a subquery over its CTE (scalar or IN-list)
             expr_sub = re.sub(r"\$\{(\w+)\}", r"(SELECT * FROM \1)", expr)
-            prefix = ""
-            if cte_defs:
-                ctes = ", ".join(
-                    f"{k} AS ({ctx.resolver.resolve_sql(v)})"
-                    for k, v in cte_defs.items())
-                prefix = f"WITH {ctes} "
-            stats = ctx.spark.sql(
-                f"{prefix}SELECT COUNT(*) AS total, "
+            stats = ctx.resolver.sql(
+                (f"WITH {ctes} " if ctes else "")
+                + f"SELECT COUNT(*) AS total, "
                 f"CAST(SUM(CASE WHEN {expr_sub} THEN 1 ELSE 0 END) AS BIGINT)"
-                f" AS valid FROM {view}")
+                f" AS valid FROM lightning.{'.'.join(self.table_path)}")
             results.append(stats.selectExpr(
                 f"'{dq_name}' AS dq_name", f"'{table}' AS table_name",
                 "'Custom Data Quality' AS check_type",

@@ -131,8 +131,9 @@ def catalog_federated_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of SMALL driver-committed jobs that leaves the cluster idle, so
     # they are submitted from driver threads and joined before
     # anything that reads them. Staging writes are concurrency-safe
-    # via sources/staging_conf (reentrant session-conf guard); all
-    # temp-view names are content-keyed in the resolver.
+    # via sources/staging_conf (reentrant session-conf guard), and the
+    # resolver binds lightning.* relations per statement, so no thread
+    # can replace another's relation.
     def _ins_chain(tbl):
         ctx.sql(f"INSERT INTO {tbl} SELECT prio FROM gate_prio_lo")
         ctx.sql(f"INSERT INTO {tbl} SELECT prio FROM gate_prio_hi")
@@ -3346,8 +3347,6 @@ def doc_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lightning_metastore_spark.operators.skyline import skyline
 
     t = load_tables(spark, sf_dir, ("documents",))
-    # n_chars/n_tokens are exactly token_counts columns — read the
-    # shared per-doc counts artifact instead of re-scanning the text
     base = t["documents"].select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),

@@ -306,17 +306,35 @@ def test_drop_datasource_and_namespace(ctx):
     ctx.sql("DROP NAMESPACE lightning.datasource.tmp")
 
 
-def test_chain_column_case_insensitive(ctx):
-    """Spark SQL identifiers are case-insensitive — a trailing column
-    segment in a lightning.* chain must resolve regardless of case."""
+_NATION = "lightning.datasource.file.tpch.nation"
+_NATION_PQ = f"parquet.`{SF_DIR}/nation.parquet`"
+
+
+@pytest.mark.parametrize("query, plain", [
+    # Spark SQL identifiers are case-insensitive — a trailing column
+    # segment in a lightning.* chain must resolve regardless of case
+    (f"SELECT {_NATION}.N_NAME AS k FROM {_NATION} ORDER BY k",
+     f"SELECT t.N_NAME AS k FROM {_NATION_PQ} t ORDER BY k"),
+    # braces are literal SQL text, never binding placeholders
+    (f"""SELECT '{{"a": 1}}' AS j, count(*) AS n FROM {_NATION}""", None),
+    ("""SELECT '{"a": 1}' AS j, get_json_object('{"a": 1}', '$.a') AS a""",
+     None),
+    (f"SELECT `{{x}}`.n_name FROM {_NATION} AS `{{x}}` ORDER BY 1", None),
+    # a repeated chain binds one relation, joined with itself
+    (f"SELECT a.n_name, b.n_name AS m FROM {_NATION} a "
+     f"JOIN {_NATION} b ON a.n_regionkey = b.n_regionkey "
+     f"WHERE a.n_nationkey < 5 ORDER BY 1, 2", None),
+], ids=["column_case", "json_literal", "json_literal_no_chain",
+        "brace_alias", "self_join"])
+def test_chain_matches_plain_spark_sql(ctx, spark, query, plain):
+    """A lightning.* statement returns exactly what plain spark.sql
+    returns over the same parquet file."""
     ctx.sql("CREATE NAMESPACE lightning.datasource.file")
     ctx.sql(f"REGISTER PARQUET DATASOURCE tpch OPTIONS(path '{SF_DIR}') "
             f"NAMESPACE lightning.datasource.file")
-    rows = ctx.sql(
-        "SELECT lightning.datasource.file.tpch.orders.O_ORDERKEY AS k "
-        "FROM lightning.datasource.file.tpch.orders ORDER BY k LIMIT 1"
-    ).collect()
-    assert len(rows) == 1 and rows[0].k is not None
+    plain = plain or query.replace(_NATION, _NATION_PQ)
+    rows = ctx.sql(query).collect()
+    assert rows and rows == spark.sql(plain).collect()
 
 
 def test_schema_drift_report(ctx, spark, tmp_path):
